@@ -293,9 +293,12 @@ object FaultSoak {
     // commit protocol (failed attempts' files discarded, the retry's
     // committed), then the driver-side rename/ledger path applies
     // once. Two stores take the SAME three intake epochs, one clean
-    // and one with the fault injector spliced into every batch; the
-    // resident content digests must be identical, and replaying an
-    // epoch on the faulted store must change nothing.
+    // and one with the fault injector spliced into every batch; each
+    // epoch publishes a snapshot version and the per-cell compaction
+    // trigger fires mid-run, so the publish, compaction, and GC paths
+    // all execute with failing tasks in the staging jobs. The snapshot
+    // digests must be identical, and replaying an epoch on the faulted
+    // store must change nothing.
     {
       val base3 =
         (injected.get, retries.failed.get, retries.retriedOk.get)
@@ -305,13 +308,13 @@ object FaultSoak {
       val NQ = 5
       val e = operators.Similarity.prepared(raw)
       val cb = operators.Similarity.firstNCodebook(e, NQ, 8)
-      def intakeRun(tag: String, inject: Boolean,
-          manifested: Boolean = false): (Long, Long, String) = {
+      def snapshotDigest(store: String): (Long, Long, String) =
+        digest(operators.StoreManifest.snapshotRead(spark,
+          s"$store/vectors"))
+      def intakeRun(tag: String, inject: Boolean): (Long, Long, String) = {
         val store = s"$soakDir/ivf_$tag"
         operators.Similarity.writeIvfStore(
           e.filter(col("vec_id") % 3 === 0), cb, NQ, store)
-        if (manifested)
-          operators.Similarity.publishIvfManifest(spark, store): Unit
         (0 until 3).foreach { i =>
           val b0 = raw.filter(col("vec_id") >= NQ &&
               col("vec_id") % 3 === (i % 3))
@@ -320,12 +323,9 @@ object FaultSoak {
           val b = if (inject) injectFaults(b0, modulo,
             s"intake-$tag-$i") else b0
           streaming.StoreIntake.ivfIntakeBatch(store, s"fs-$tag",
-            compactOver = if (manifested) 2 else 0)(b, i.toLong)
+            compactOver = 2)(b, i.toLong)
         }
-        if (manifested)
-          digest(operators.StoreManifest.snapshotRead(spark,
-            s"$store/vectors"))
-        else digest(spark.read.parquet(s"$store/vectors"))
+        snapshotDigest(store)
       }
       val intakeClean = intakeRun("clean", inject = false)
       ChainSoak.drainListeners(spark)
@@ -342,8 +342,7 @@ object FaultSoak {
             col("vec_id") % 3 === 0)
           .withColumn("vec_id", col("vec_id") + lit(10000000L)),
           modulo, "intake-replay"), 0L)
-      val intakeReplayed =
-        digest(spark.read.parquet(s"$soakDir/ivf_faulty/vectors"))
+      val intakeReplayed = snapshotDigest(s"$soakDir/ivf_faulty")
       ChainSoak.drainListeners(spark)
       val iInj = injected.get - mid3._1
       val iRetried = retries.retriedOk.get - mid3._3
@@ -360,33 +359,6 @@ object FaultSoak {
         "replaying an applied epoch changed the faulted store")
       require(iInj > 0 && iRetried > 0,
         "intake phase saw no injected faults/retries — vacuous")
-
-      // Phase 3b: the MANIFESTED intake under the same injected
-      // retries — epoch appends publish snapshot versions and the
-      // per-cell compaction trigger fires mid-run, so the publish,
-      // compaction, and GC paths all execute with failing tasks in
-      // the staging jobs. Snapshot digests must match the clean run's.
-      val mBase =
-        (injected.get, retries.failed.get, retries.retriedOk.get)
-      val manClean = intakeRun("man-clean", inject = false,
-        manifested = true)
-      ChainSoak.drainListeners(spark)
-      val manFaulty = intakeRun("man-faulty", inject = true,
-        manifested = true)
-      ChainSoak.drainListeners(spark)
-      val mInj = injected.get - mBase._1
-      val mRetried = retries.retriedOk.get - mBase._3
-      println(s"""{"metric":"fault_intake_manifested",""" +
-        s""""rows":${manClean._1},""" +
-        s""""digest_clean":"${manClean._2}:${manClean._3}",""" +
-        s""""digest_faulty":"${manFaulty._2}:${manFaulty._3}",""" +
-        s""""injected_faults":$mInj,"retried_ok":$mRetried,""" +
-        s""""match":${manClean == manFaulty}}""")
-      require(manClean == manFaulty,
-        s"manifested intake diverged under retry: clean=$manClean " +
-          s"faulty=$manFaulty")
-      require(mInj > 0 && mRetried > 0,
-        "manifested intake phase saw no injected faults — vacuous")
     }
 
     operators.Dedup.clearCaches(spark)

@@ -27,8 +27,7 @@ object GraftConf {
 
   def tune(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_OBJAGG_FALLBACK",
-        ObjAggFallbackGroups.toString))
+      ObjAggFallbackGroups.toString)
       // RocksDB state store: required by transformWithState (the
       // arbitrary-stateful operator StatefulOps builds on) and the
       // recommended provider for production streaming state anyway —
@@ -53,8 +52,7 @@ object GraftConf {
       // unchanged (CheckpointRecoverySpec and the nine declared replay
       // queries gate that on the oracle path).
       .config("spark.sql.streaming.stateStore.rocksdb." +
-        "changelogCheckpointing.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_CHANGELOG", "true"))
+        "changelogCheckpointing.enabled", "true")
       // The events table carries INT64 TIMESTAMP(NANOS); reading it
       // requires this legacy flag (Tables.t also sets it defensively,
       // but setting it at session build makes the policy uniform from

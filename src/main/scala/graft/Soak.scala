@@ -355,8 +355,8 @@ object Soak {
     val (_, tIvfWrite) = timed {
       operators.Similarity.writeIvfStore(e, cbLloyd, NQ, ivfDir)
     }
-    val storedIvf = operators.Similarity.ivfTopKFromStore(spark, ivfDir,
-      operators.Similarity.querySide(e, NQ), 4, 10)
+    val storedIvf = operators.Similarity.ivfTopKFromSnapshot(spark,
+      ivfDir, operators.Similarity.querySide(e, NQ), 4, 10)
     val (storedRows, tIvfProbe) = timed { storedIvf.collect() }
     val ivfPlan = storedIvf.queryExecution.executedPlan
     val ivfScan = ivfPlan.collectLeaves().map(_.toString)

@@ -282,7 +282,8 @@ object StreamSoak {
       val store = s"$tmp/ivf_intake"
       operators.Similarity.writeIvfStore(e,
         operators.Similarity.firstNCodebook(e, NQ, 16), NQ, store)
-      val baseRows = spark.read.parquet(s"$store/vectors").count()
+      val baseRows = operators.StoreManifest
+        .snapshotRead(spark, s"$store/vectors").count()
       val baseVecs = raw.filter(col("vec_id") >= NQ)
         .as[(Long, Seq[Double])].collect()
       val batchVecs = math.min(200, baseVecs.length)
@@ -326,7 +327,8 @@ object StreamSoak {
           while (it.hasNext) {
             val s = it.next()
             if (!s.getPath.getName.startsWith("_") &&
-              !s.getPath.toString.contains("/."))
+              !s.getPath.toString.contains("/.") &&
+              !s.getPath.toString.contains("/_manifest/"))
               b += ((s.getPath.toString, s.getLen))
           }
           b.result()
@@ -437,8 +439,11 @@ object StreamSoak {
           lastListing = now
         }
       }
-      // Replay both streams' first batches directly: nothing changes.
+      // Replay both streams' first batches directly: nothing changes —
+      // no file and no manifest version.
       val ivfBefore = listingOf(s"$store/vectors")
+      val ivfV = operators.StoreManifest.currentVersion(spark,
+        s"$store/vectors")
       val sigBefore = listingOf(sigPath)
       val replayVec = Seq((10000000L + NQ, Seq.fill(64)(0.5)))
         .toDF("vec_id", "embedding")
@@ -447,6 +452,8 @@ object StreamSoak {
       streaming.StoreIntake.signatureIntakeBatch(sigTable, sigPath,
         "soak")(Seq((1L, "replayed text")).toDF("doc_id", "text"), 0L)
       require(listingOf(s"$store/vectors") == ivfBefore &&
+        operators.StoreManifest.currentVersion(spark,
+          s"$store/vectors") == ivfV &&
         listingOf(sigPath) == sigBefore,
         "replayed batches must append nothing")
       // Manifested documents store: versions advanced, live files per
@@ -557,8 +564,11 @@ object StreamSoak {
       vecQuery.stop(); docQuery.stop(); docStoreQuery.stop()
       tsQuery.stop()
 
-      // Exactness: stored rows = base + every fed vector, no dups.
-      val storedRows = spark.read.parquet(s"$store/vectors")
+      // Exactness: stored rows = base + every fed vector, no dups —
+      // read from the snapshot: the directory also holds files the
+      // in-loop compaction expired but GC has not yet collected.
+      val storedRows = operators.StoreManifest
+        .snapshotRead(spark, s"$store/vectors")
       val nStored = storedRows.count()
       val nDistinct = storedRows.select("n_id").distinct().count()
       require(nStored == baseRows + nB.toLong * batchVecs &&
@@ -567,13 +577,13 @@ object StreamSoak {
           s"expected ${baseRows + nB.toLong * batchVecs}")
       // Compaction held the line: with threshold 4 and one file per
       // touched cell per epoch, no cell may exceed threshold + a few
-      // in-flight epochs.
+      // in-flight epochs (live files, as the manifest lists them).
       val cellFiles = operators.Similarity
-        .ivfStoreCellStats(spark, store).map(_._2)
+        .ivfCellFiles(spark, store).map(_._2)
       require(cellFiles.max <= 8,
         s"compaction trigger failed to bound files/cell: $cellFiles")
       // Probe stays partition-pruned off the post-compaction store.
-      val probe = operators.Similarity.ivfTopKFromStore(spark, store,
+      val probe = operators.Similarity.ivfTopKFromSnapshot(spark, store,
         operators.Similarity.querySide(e, NQ), nProbe = 4, k = 10)
       val probeRows = probe.count()
       val scanStr = probe.queryExecution.executedPlan.collectLeaves()

@@ -134,15 +134,17 @@ object VectorSoak {
     val ivfDir = s"$soakDir/ivf_store"
     stage("ivf_build") {
       operators.Similarity.writeIvfStore(e, cbStale, NQ, ivfDir)
-      (spark.read.parquet(s"$ivfDir/vectors").count(), Nil)
+      (operators.StoreManifest.snapshotRead(spark, s"$ivfDir/vectors")
+        .count(), Nil)
     }
 
     // ---- store probe: partition-pruned scan, q_id-only shuffles,
     // recall vs exact truth.
     var recallPre = 0.0
     stage("store_probe") {
-      val probe = operators.Similarity.ivfTopKFromStore(spark, ivfDir,
-        operators.Similarity.querySide(e, NQ), nProbe = 4, k = 10)
+      val probe = operators.Similarity.ivfTopKFromSnapshot(spark,
+        ivfDir, operators.Similarity.querySide(e, NQ), nProbe = 4,
+        k = 10)
       val rows = probe.count()
       val plan = probe.queryExecution.executedPlan
       val scanStr = plan.collectLeaves().map(_.toString)
@@ -235,7 +237,8 @@ object VectorSoak {
         s"ceiling $recallCell")
 
     // ---- epoch append: intake assigned against the STORED codebook,
-    // resident files untouched (byte-identical listing).
+    // resident files untouched (byte-identical listing), published as
+    // the next manifest version over old ∪ new.
     stage("epoch_append") {
       val fsPath = new org.apache.hadoop.fs.Path(s"$ivfDir/vectors")
       val fs = fsPath.getFileSystem(spark.sessionState.newHadoopConf())
@@ -244,16 +247,19 @@ object VectorSoak {
         val b = Set.newBuilder[(String, Long)]
         while (it.hasNext) {
           val s = it.next()
-          if (!s.getPath.getName.startsWith("_"))
+          if (!s.getPath.getName.startsWith("_") &&
+            !s.getPath.toString.contains("/_manifest/"))
             b += ((s.getPath.toString, s.getLen))
         }
         b.result()
       }
       val before = listing()
-      operators.Similarity.appendToIvfStore(intake, ivfDir)
+      val v = operators.Similarity.appendToIvfStoreManifested(intake,
+        ivfDir)
       val after = listing()
       require(before.subsetOf(after),
         "epoch append rewrote resident store files")
+      require(v == 2L, s"epoch append published v$v, expected v2")
       (nIntake, Nil)
     }
 
@@ -267,8 +273,9 @@ object VectorSoak {
     val nBruteUnion = bruteUnion.count()
     var recallPost = 0.0
     stage("store_probe_post") {
-      val probe = operators.Similarity.ivfTopKFromStore(spark, ivfDir,
-        operators.Similarity.querySide(e, NQ), nProbe = 4, k = 10)
+      val probe = operators.Similarity.ivfTopKFromSnapshot(spark,
+        ivfDir, operators.Similarity.querySide(e, NQ), nProbe = 4,
+        k = 10)
       val rows = probe.collect()
       // Truth set is k × queries rows — driver-side overlap is exact
       // and avoids re-running the probe.
@@ -298,11 +305,11 @@ object VectorSoak {
       s"IVF recall collapsed: pre=$recallPre post=$recallPost")
 
     // ---- codebook-drift remediation (VERDICT r13 #5): the appended
-    // store is adopted under a manifest, the STALE codebook RETRAINED
-    // on the drifted union (3 deterministic Lloyd iterations from the
-    // stored book), and one snapshot compaction reassigns every
-    // resident vector to the retrained cells with the codebook
-    // published versioned alongside the flip. Gates: the re-clustered
+    // store's STALE codebook is RETRAINED on the drifted union (3
+    // deterministic Lloyd iterations from the stored book), and one
+    // snapshot compaction reassigns every resident vector to the
+    // retrained cells with the codebook published versioned alongside
+    // the flip. Gates: the re-clustered
     // probe's recall at the SAME nProbe must beat (or match) the
     // stale pre-compaction probe — retraining exists to recover
     // drift-lost recall (measured here: ~0.40 stale → ~0.49 trained)
@@ -310,7 +317,6 @@ object VectorSoak {
     // in-memory IVF over the same retrained codebook and union corpus.
     var recallRecompact = 0.0
     stage("ivf_recompact") {
-      operators.Similarity.publishIvfManifest(spark, ivfDir): Unit
       val cbNew = operators.Similarity.lloydRefine(eUnion, cbStale, NQ,
         iters = 3)
       operators.Similarity.recompactIvfStoreClustered(spark, ivfDir,

@@ -23,8 +23,11 @@ object AtRestStores {
   /** Write the documents table partitioned by source. Source
     * cardinality is governance-sized (tens to thousands), so the
     * directory fan-out stays far below filesystem limits; a source
-    * whose files are tiny is compacted by the normal maxRecordsPerFile
-    * / AQE-coalesce levers, not a layout change.
+    * whose files are tiny is folded by [[compactDocumentsSources]],
+    * not a layout change. Nothing bounds file SIZE: maxRecordsPerFile
+    * is not set, so a hot source is one write task and one file —
+    * repartitioning on (source, hash slice) is the lever that splits
+    * it.
     */
   def writeDocumentsStore(docs: DataFrame, path: String): Unit =
     docs.write.partitionBy("source").mode("overwrite").parquet(path)
@@ -59,11 +62,12 @@ object AtRestStores {
   def documentsStoreEvolved(spark: SparkSession, path: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(path)
 
-  /** Adopt snapshot manifests for a documents store (the IVF store's
-    * publishIvfManifest, for documents): pin the current data files as
-    * version 1. From then on read through [[documentsSnapshot]] and
-    * compact with [[compactDocumentsSources]] — same contracts, same
-    * GC (`StoreManifest.gcExpired`), same orphan sweep.
+  /** Adopt snapshot manifests for a documents store: pin the current
+    * data files as version 1 (the IVF store publishes its v1 at build,
+    * inside Similarity.writeIvfStore). From then on read through
+    * [[documentsSnapshot]] and compact with [[compactDocumentsSources]]
+    * — same contracts, same GC (`StoreManifest.gcExpired`), same
+    * orphan sweep.
     */
   def publishDocumentsManifest(spark: SparkSession, path: String): Long =
     StoreManifest.publish(spark, path,

@@ -271,25 +271,13 @@ object Similarity {
   def querySide(e: DataFrame, nQueries: Int): DataFrame =
     split(e, nQueries)._1
 
-  /** At-rest IVF layout: every corpus vector assigned to its nearest
-    * centroid ONCE, written PARTITIONED BY cell id with the KB-sized
-    * codebook alongside — the layout a 100 TB vector corpus maintains
-    * so query batches never pay assignment (corpus × centroids) again
-    * and, more importantly, never SCAN unprobed cells: the probe's
-    * cell set pushes into the parquet read as a partition filter, so
-    * with nProbe of nCentroids cells probed the scan reads ~nProbe/
-    * nCentroids of the corpus FROM DISK. Cell skew follows data skew
-    * (Lloyd centroids equalize mass roughly); a pathologically hot
-    * cell is bounded the same way ivfTopKWith's scoring is — per-cell
-    * work is (cell size × queries probing it), and splitting hot cells
-    * (training more centroids) is the production lever.
-    */
   /** Corpus rows with their nearest-centroid cell id — the one
     * corpus-wide assignment pass the store amortizes away; shared by
-    * the initial build and epoch appends. Same payload-free argmax as
-    * ivfTopKWith. cid is cast to int on write AND probe: parquet
-    * partition directories infer back as IntegerType, and a type
-    * mismatch on the partition column would silently disable pruning.
+    * the initial build, epoch appends and re-clustering. Same
+    * payload-free argmax as ivfTopKWith. cid is cast to int on write
+    * AND probe: parquet partition directories infer back as
+    * IntegerType, and a type mismatch on the partition column would
+    * silently disable pruning.
     */
   private def withCellIds(corpus: DataFrame,
       codebook: DataFrame): DataFrame =
@@ -302,91 +290,124 @@ object Similarity {
       .select(corpus.columns.map(col).toSeq :+
         col("cid").cast("int").as("cid"): _*)
 
+  /** At-rest IVF layout: every corpus vector assigned to its nearest
+    * centroid ONCE, written PARTITIONED BY cell id with the KB-sized
+    * codebook alongside — the layout a 100 TB vector corpus maintains
+    * so query batches never pay assignment (corpus × centroids) again
+    * and, more importantly, never SCAN unprobed cells: the probe's
+    * cell set pushes into the parquet read as a partition filter, so
+    * with nProbe of nCentroids cells probed the scan reads ~nProbe/
+    * nCentroids of the corpus FROM DISK. Cell skew follows data skew
+    * (Lloyd centroids equalize mass roughly); a pathologically hot
+    * cell is bounded the same way ivfTopKWith's scoring is — per-cell
+    * work is (cell size × queries probing it), and splitting hot cells
+    * (training more centroids) is the production lever.
+    *
+    * The store is born manifested: the build publishes manifest v1
+    * over the files it wrote, and every later read, append, drift
+    * report and compaction resolves a snapshot (StoreManifest) — none
+    * lists the directory, which between a snapshot compaction and GC
+    * holds live AND expired copies of the same rows. A rebuild at the
+    * same path starts a fresh version line, so it also deletes the
+    * previous store's retrained `codebook-v&lt;N&gt;` generations: left in
+    * place, [[codebookPathAsOf]] would hand an old retrained book to
+    * the new store's intake and probes once its line reached N. The
+    * overwrite drops the old manifest first, so until the final
+    * publish the directory reads as unmanifested and readers fail
+    * loudly instead of pairing a layout with the wrong centroids.
+    */
   def writeIvfStore(e: DataFrame, codebook: DataFrame, nQueries: Int,
       path: String): Unit = {
+    val spark = e.sparkSession
     val corpus = e.filter(col("vec_id") >= nQueries)
       .select(col("vec_id").as("n_id"), col("v").as("cv"),
         col("nrm").as("cn"))
     withCellIds(corpus, codebook)
       .write.partitionBy("cid").mode("overwrite")
       .parquet(s"$path/vectors")
-    codebook.write.mode("overwrite").parquet(s"$path/codebook")
-  }
-
-  /** Epoch-append new vectors into an existing IVF store WITHOUT
-    * rewriting history (VERDICT r9 #3): intake is assigned against the
-    * STORED codebook (broadcast, KB-sized) and appended as new files
-    * under the matching cell directories — resident files are never
-    * touched, probes stay partition-pruned, and a probe after the
-    * append sees exactly (old ∪ new) because cell assignment against a
-    * fixed codebook is order-independent. The codebook deliberately
-    * does NOT retrain on intake: retraining moves cell boundaries and
-    * would demand corpus reassignment — the production cadence is many
-    * epoch appends, then a full rebuild when drift (cell-mass skew in
-    * [[ivfStoreCellStats]]) crosses its criterion.
-    *
-    * `newVectors` is a prepared frame (vec_id, v, nrm) as from
-    * [[prepared]].
-    */
-  /** The epoch frame an append writes: (n_id, cv, cn) plus ANY
-    * additional columns the prepared frame carries (additive schema
-    * evolution — an intake epoch may attach metadata like a source
-    * tag; resident epochs read them as null through
-    * [[ivfStoreRead]]'s mergeSchema). Guarded by
-    * [[assertEvolvableSchema]]: shared columns must keep their exact
-    * type — a silently coerced column would corrupt every probe.
-    */
-  /** The codebook generation in force at `version` (or at the current
-    * version when None): the greatest `codebook-v&lt;M&gt;` with M ≤ the
-    * bound, falling back to the build-time `codebook`. Exact-match
-    * resolution would silently REVERT readers to the original book as
-    * soon as any post-recompaction publish (an epoch append) advanced
-    * the version past the retrain's — old centroids probing the
-    * retrained layout. Greatest-≤ keeps every later version on the
-    * newest book it was built under. Residual crash window (documented,
-    * single-writer): a retrain that wrote `codebook-v&lt;N&gt;` but died
-    * before its flip leaves an orphan that the NEXT publish landing on
-    * version N would activate — recompactIvfStoreClustered `require`s
-    * its staged version is the one published, and the orphan sweep is
-    * the same operator-driven cleanup as compact-* leaks.
-    */
-  private def codebookPathAsOf(spark: SparkSession, path: String,
-      version: Option[Long]): String = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val bound = version
-      .orElse(StoreManifest.currentVersion(spark, s"$path/vectors"))
-      .getOrElse(Long.MaxValue)
-    val gens =
-      if (!fs.exists(root)) Seq.empty
-      else fs.listStatus(root).toSeq.flatMap { s =>
-        val n = s.getPath.getName
-        if (s.isDirectory && n.startsWith("codebook-v"))
-          scala.util.Try(n.stripPrefix("codebook-v").toLong).toOption
-        else None
-      }.filter(_ <= bound)
+    codebookGenerations(fs, root).foreach(g => fs.delete(
+      new org.apache.hadoop.fs.Path(root, s"codebook-v$g"), true): Unit)
+    codebook.write.mode("overwrite").parquet(s"$path/codebook")
+    StoreManifest.publish(spark, s"$path/vectors",
+      StoreManifest.listDataFiles(spark, s"$path/vectors")): Unit
+  }
+
+  /** The store's current manifest version — every IVF store operation
+    * starts here; a directory without one was not built by
+    * [[writeIvfStore]] (or is mid-rebuild) and is rejected.
+    */
+  private def ivfVersion(spark: SparkSession, path: String): Long =
+    StoreManifest.currentVersion(spark, s"$path/vectors").getOrElse(
+      throw new IllegalStateException(
+        s"$path/vectors carries no manifest — build the store with " +
+          "writeIvfStore"))
+
+  /** The `codebook-v<N>` generation numbers present under a store. */
+  private def codebookGenerations(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Seq[Long] =
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq.flatMap { s =>
+      val n = s.getPath.getName
+      if (s.isDirectory && n.startsWith("codebook-v"))
+        scala.util.Try(n.stripPrefix("codebook-v").toLong).toOption
+      else None
+    }
+
+  /** The codebook generation in force at `version`: the greatest
+    * `codebook-v&lt;M&gt;` with M ≤ the version, falling back to the
+    * build-time `codebook`. Exact-match resolution would silently
+    * REVERT readers to the original book as soon as any
+    * post-recompaction publish (an epoch append) advanced the version
+    * past the retrain's — old centroids probing the retrained layout.
+    * Greatest-≤ keeps every later version on the newest book it was
+    * built under. Residual crash window (documented, single-writer): a
+    * retrain that wrote `codebook-v&lt;N&gt;` but died before its flip
+    * leaves an orphan that the NEXT publish landing on version N would
+    * activate — recompactIvfStoreClustered `require`s its staged
+    * version is the one published, and the orphan sweep is the same
+    * operator-driven cleanup as compact-* leaks.
+    */
+  private def codebookPathAsOf(spark: SparkSession, path: String,
+      version: Long): String = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val gens = codebookGenerations(fs, root).filter(_ <= version)
     if (gens.isEmpty) s"$path/codebook"
     else s"$path/codebook-v${gens.max}"
   }
 
+  /** The epoch frame an append writes: (n_id, cv, cn, cid) plus ANY
+    * additional columns the prepared frame carries (additive schema
+    * evolution — an intake epoch may attach metadata like a source
+    * tag; resident epochs read them as null through a mergeSchema
+    * snapshot read). Guarded by [[assertEvolvableSchema]]: shared
+    * columns must keep their exact type — a silently coerced column
+    * would corrupt every probe. The current version pins both the
+    * codebook generation intake assigns against and the file set the
+    * gate reads.
+    */
   private def epochFrame(newVectors: DataFrame, path: String): DataFrame = {
     val spark = newVectors.sparkSession
+    val version = ivfVersion(spark, path)
     // Intake assigns against the codebook generation currently in
     // force — after a recompaction that is codebook-v<N>, not the
     // build-time book (old centroids would scatter new vectors into
     // cells the retrained layout no longer means).
     val codebook = loadCodebook(spark,
-      codebookPathAsOf(spark, path, None))
+      codebookPathAsOf(spark, path, version))
     val extra = newVectors.columns
       .filterNot(Set("vec_id", "v", "nrm")).toSeq
     val corpus = newVectors.select((Seq(col("vec_id").as("n_id"),
       col("v").as("cv"), col("nrm").as("cn")) ++ extra.map(col)): _*)
     val staged = withCellIds(corpus, codebook)
-    // The gate compares against the MERGED resident schema: a plain
-    // read samples one footer, and a pre-evolution file's footer would
-    // hide already-evolved columns from the check.
-    assertEvolvableSchema(
-      ivfStoreRead(spark, path).schema, staged.schema)
+    // The gate compares against the MERGED schema of the snapshot's
+    // files: a plain read samples one footer, and a pre-evolution
+    // file's footer would hide already-evolved columns from the check.
+    assertEvolvableSchema(StoreManifest.snapshotReadAsOf(spark,
+      s"$path/vectors", version, mergeSchema = true).schema,
+      staged.schema)
     staged
   }
 
@@ -411,52 +432,48 @@ object Similarity {
     }
   }
 
-  /** Read the vector table with additive evolution visible: epochs
-    * that predate a column surface it as null. Probes that only touch
-    * the core (n_id, cv, cn, cid) columns can keep the plain read —
-    * parquet resolves missing columns per file either way; mergeSchema
-    * is for consumers that SELECT evolved columns.
-    */
-  def ivfStoreRead(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(s"$path/vectors")
-
-  def appendToIvfStore(newVectors: DataFrame, path: String): Unit =
-    epochFrame(newVectors, path)
-      .write.partitionBy("cid").mode("append")
-      .parquet(s"$path/vectors")
-
-  /** [[appendToIvfStore]] for a MANIFESTED store: appends the epoch
-    * and publishes current-snapshot ∪ fresh-files COMPOSITIONALLY,
-    * returning the new version. The compositional form matters: a
-    * listing-based re-publish (publishIvfManifest) after a snapshot
+  /** Epoch-append new vectors into the store WITHOUT rewriting history
+    * (VERDICT r9 #3): intake is assigned against the codebook in force
+    * (broadcast, KB-sized) and appended as new files under the
+    * matching cell directories — resident files are never touched,
+    * probes stay partition-pruned, and a probe after the append sees
+    * exactly (old ∪ new) because cell assignment against a fixed
+    * codebook is order-independent. The codebook deliberately does
+    * NOT retrain on intake: retraining moves cell boundaries and
+    * demands corpus reassignment ([[recompactIvfStoreClustered]]) —
+    * the production cadence is many epoch appends, then a retrain when
+    * drift ([[ivfStoreDriftSnapshot]]) crosses its criterion.
+    *
+    * Publishes current-snapshot ∪ fresh-files COMPOSITIONALLY and
+    * returns the new version: a relisting publish after a snapshot
     * compaction would resurrect the compaction's expired-but-unGC'd
-    * files into the manifest — every pre-compaction row double-counted
-    * by snapshot readers until GC. (The ledgered streaming intake,
+    * files into the manifest — every pre-compaction row
+    * double-counted until GC. (The ledgered streaming intake,
     * StoreIntake, composes for the same reason; this is the direct
-    * batch-append counterpart.)
+    * batch-append counterpart.) `newVectors` is a prepared frame
+    * (vec_id, v, nrm) as from [[prepared]].
     */
   def appendToIvfStoreManifested(newVectors: DataFrame,
       path: String): Long = {
     val spark = newVectors.sparkSession
     val root = s"$path/vectors"
-    val cur = StoreManifest.files(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"$root is not manifested — use appendToIvfStore + an initial " +
-          "publishIvfManifest for unmanifested stores"))
+    val staged = epochFrame(newVectors, path)
+    val cur = StoreManifest.files(spark, root).get
     val before = StoreManifest.listDataFiles(spark, root).toSet
-    appendToIvfStore(newVectors, path)
+    staged.write.partitionBy("cid").mode("append").parquet(root)
     val fresh = StoreManifest.listDataFiles(spark, root)
       .filterNot(before)
     StoreManifest.publish(spark, root, cur ++ fresh)
   }
 
-  /** The STAGED form of [[appendToIvfStore]] (streaming intake —
-    * graft.streaming.StoreIntake): same assignment against the stored
-    * codebook, but the epoch's cell-partitioned files land in
-    * `stageDir` instead of the live store — exactly-once placement
-    * (intent ledger, tagged renames, replay cleanup) is the caller's
-    * job. Sharing epochFrame keeps direct and staged appends
-    * assignment- and schema-gate-identical by construction.
+  /** The STAGED form of [[appendToIvfStoreManifested]] (streaming
+    * intake — graft.streaming.StoreIntake): same assignment against
+    * the codebook in force, but the epoch's cell-partitioned files
+    * land in `stageDir` instead of the live store — exactly-once
+    * placement (intent ledger, tagged renames, replay cleanup) and the
+    * manifest publish are the caller's job. Sharing epochFrame keeps
+    * direct and staged appends assignment- and schema-gate-identical
+    * by construction.
     */
   def stageIvfEpoch(newVectors: DataFrame, path: String,
       stageDir: String): Unit =
@@ -502,10 +519,10 @@ object Similarity {
           "as bigint)").as("err_micro")))
   }
 
-  /** Shared aggregation tail of [[ivfCellStatsWith]]/[[ivfStoreDrift]]
-    * over an assigned (cid, err_micro) frame — one copy so the share
-    * formula, rounding, and output schema cannot drift apart (the two
-    * callers are spec-pinned equal).
+  /** Shared aggregation tail of [[ivfCellStatsWith]] /
+    * [[ivfStoreDriftSnapshot]] over an assigned (cid, err_micro)
+    * frame — one copy so the share formula, rounding, and output
+    * schema cannot drift apart (the two callers are spec-pinned equal).
     */
   private def perCellStats(assigned: DataFrame): DataFrame =
     assigned.groupBy("cid")
@@ -519,36 +536,29 @@ object Similarity {
           .as("avg_err_micro"))
       .orderBy("cid")
 
-  /** Drift report straight OFF a deployed store: vectors already carry
-    * their cell (the partition column), so no reassignment argmax runs
-    * — one pruned-free full scan, a broadcast codebook join for the
-    * per-vector error, and a cells-sized aggregate. Equals
-    * [[ivfCellStatsWith]] over the same corpus and codebook exactly
-    * (assignment against a fixed codebook is what wrote the cid
-    * column), which StoreMaintenanceSpec pins — run it per epoch
-    * append and alert on share or error drift (DEPLOY.md §2).
-    */
-  def ivfStoreDrift(spark: SparkSession, path: String): DataFrame =
-    ivfStoreDriftOver(spark, path,
-      spark.read.parquet(s"$path/vectors"))
-
-  /** [[ivfStoreDrift]] against the manifest SNAPSHOT — the valid form
-    * on a manifested store (a directory listing sees live AND
-    * expired-until-GC files after a snapshot compaction and would
-    * double-count every compacted cell's mass).
+  /** Drift report straight OFF a deployed store's current snapshot:
+    * vectors already carry their cell (the partition column), so no
+    * reassignment argmax runs — one full snapshot scan, a broadcast
+    * codebook join for the per-vector error, and a cells-sized
+    * aggregate. The version is resolved once and pins both the file
+    * set and the codebook generation that layout was built under, so
+    * after [[recompactIvfStoreClustered]] the error is measured
+    * against the retrained centroids. Equals [[ivfCellStatsWith]] over
+    * the same corpus and codebook exactly (assignment against a fixed
+    * codebook is what wrote the cid column), which SimilaritySpec pins
+    * — run it per epoch append and alert on share or error drift
+    * (DEPLOY.md §2).
     */
   def ivfStoreDriftSnapshot(spark: SparkSession,
-      path: String): DataFrame =
-    ivfStoreDriftOver(spark, path,
-      StoreManifest.snapshotRead(spark, s"$path/vectors"))
-
-  private def ivfStoreDriftOver(spark: SparkSession, path: String,
-      vectors: DataFrame): DataFrame = {
+      path: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
+    val version = ivfVersion(spark, path)
+    val vectors = StoreManifest.snapshotReadAsOf(spark, s"$path/vectors",
+      version)
     // Bounded driver-local load, as on every probe path: a corpus-
     // sized file at the codebook path must fail loudly here too, not
     // broadcast into the anti-join.
-    val cent = loadCodebook(spark, s"$path/codebook")
+    val cent = loadCodebook(spark, codebookPathAsOf(spark, path, version))
     // A cid with no codebook row is store CORRUPTION (codebook dir
     // overwritten by a smaller retrain, cell dir surviving a partial
     // rebuild) — exactly what a drift monitor must surface. An inner
@@ -566,112 +576,37 @@ object Similarity {
           "* 1000000) as bigint)").as("err_micro")))
   }
 
-  /** Per-cell (cid, n_files, bytes) for the compaction / rebuild
-    * criteria. Driver-side listing of the cell directories — codebook-
-    * cardinality directories, not corpus-scale.
+  /** Live files per cell, (cid, n_files) in cid order, from the
+    * current manifest — the compaction criterion (each epoch append
+    * adds a file per touched cell). The directory also holds the files
+    * a snapshot compaction expired until GC; counting those would
+    * re-trigger compaction on cells already folded.
     */
-  def ivfStoreCellStats(spark: SparkSession,
-      path: String): Seq[(Int, Int, Long)] = {
-    val root = new org.apache.hadoop.fs.Path(s"$path/vectors")
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("cid="))
-      .map { d =>
-        val files = fs.listStatus(d.getPath).toSeq
-          .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-        (d.getPath.getName.stripPrefix("cid=").toInt, files.size,
-          files.map(_.getLen).sum)
-      }
-      .sortBy(_._1)
-  }
+  def ivfCellFiles(spark: SparkSession, path: String): Seq[(Int, Int)] =
+    StoreManifest.files(spark, s"$path/vectors",
+      Some(ivfVersion(spark, path))).get
+      .groupBy(_.takeWhile(_ != '/'))
+      .collect { case (cell, fl) if cell.startsWith("cid=") =>
+        (cell.stripPrefix("cid=").toInt, fl.size) }
+      .toSeq.sortBy(_._1)
 
-  /** Compact ONLY the named cells (those whose file count crossed the
-    * criterion — each epoch append adds one file per touched cell):
-    * each cell's rows are rewritten into one file, staged in a temp
-    * directory and swapped in with file moves, so untouched cells'
-    * files are never read OR written — the partial-maintenance shape a
-    * 100 TB store needs (a nightly compaction touches hot cells, not
-    * the corpus).
-    *
-    * Crash safety (single maintenance writer assumed — concurrent
-    * APPENDS to a cell being compacted would be lost; schedule
-    * compaction and intake in the same maintenance window): per cell,
-    * the prior files are first RENAMED into a dot-prefixed backup
-    * subdir (invisible to parquet listings), then the staged files
-    * move in, then the backup is dropped. No step destroys the only
-    * copy: a crash before the backup-drop leaves the old rows under
-    * `.compact-bak-*` and/or the staged rows under `.compact-*` — both
-    * recoverable by moving files back — and the staging dir is kept
-    * (not deleted) on failure for exactly that reason. A transactional
-    * table format would make the swap atomic; probes concurrent with
-    * the swap window should run against a snapshot listing.
-    */
-  def compactIvfCells(spark: SparkSession, path: String,
-      cells: Seq[Int]): Unit = {
-    if (cells.isEmpty) return
-    val hconf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(s"$path/vectors")
-    val fs = root.getFileSystem(hconf)
-    val runId = java.util.UUID.randomUUID().toString
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/.compact-$runId")
-    spark.read.parquet(s"$path/vectors")
-      .filter(col("cid").isin(cells: _*))
-      .repartition(cells.size, col("cid"))
-      .write.partitionBy("cid").parquet(tmp.toString)
-    cells.foreach { c =>
-      val dst = new org.apache.hadoop.fs.Path(root, s"cid=$c")
-      val src = new org.apache.hadoop.fs.Path(tmp, s"cid=$c")
-      val bak = new org.apache.hadoop.fs.Path(dst, s".compact-bak-$runId")
-      val fresh = fs.listStatus(src).toSeq
-        .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-      fs.mkdirs(bak)
-      fs.listStatus(dst).toSeq
-        .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-        .foreach(s => fs.rename(s.getPath,
-          new org.apache.hadoop.fs.Path(bak, s.getPath.getName)))
-      fresh.foreach(s =>
-        fs.rename(s.getPath, new org.apache.hadoop.fs.Path(dst,
-          s.getPath.getName)))
-      fs.delete(bak, true): Unit
-    }
-    // Reached only on success — on failure the staging dir survives
-    // alongside any backups, so nothing is ever the sole deleted copy.
-    fs.delete(tmp, true): Unit
-  }
-
-  /** Manifest the vector directory: publish a snapshot listing of its
-    * current data files (see StoreManifest). Run once at store build
-    * (or adoption) time; intake and snapshot compaction then publish
-    * follow-up versions. Returns the published version.
-    */
-  def publishIvfManifest(spark: SparkSession, path: String): Long = {
-    val root = s"$path/vectors"
-    StoreManifest.publish(spark, root,
-      StoreManifest.listDataFiles(spark, root))
-  }
-
-  /** Snapshot compaction (VERDICT r10 #6) — [[compactIvfCells]] without
-    * the reader race: the named cells' rows (read from the CURRENT
-    * manifest snapshot) are rewritten into fresh files placed UNDER
-    * NEW NAMES next to the live ones — nothing is moved or deleted —
-    * and a new manifest version swaps the cell's file set in one
-    * atomic pointer flip. Readers that resolved any version always
-    * find their full file list on disk: pre- or post-compaction
-    * results, never a half-swapped cell. Replaced files stay as the
-    * new version's `expired` set until an explicit
-    * StoreManifest.gcExpired after in-flight readers drain.
-    * Single-maintenance-writer, as ever.
-    *
-    * ADOPTION CONTRACT: once a store is manifested and snapshot
-    * compaction has run, LISTING-based consumers (ivfTopKFromStore,
-    * ivfStoreDrift, ivfStoreCellStats) see live AND expired files and
-    * would double-count until GC completes — route every read through
-    * the snapshot variants ([[ivfTopKFromSnapshot]],
-    * StoreManifest.snapshotRead) from that point on. A crash between
-    * the staged write and the manifest flip leaks untracked
-    * `compact-*` files (invisible to snapshots, visible to listings) —
+  /** Compact ONLY the named cells (those whose live file count crossed
+    * the criterion, [[ivfCellFiles]]): the cells' rows, read from the
+    * CURRENT snapshot, are rewritten into fresh files placed UNDER NEW
+    * NAMES next to the live ones — nothing is moved or deleted — and a
+    * new manifest version swaps the cells' file sets in one atomic
+    * pointer flip. Untouched cells' files are never read or written
+    * (the partial-maintenance shape a 100 TB store needs: a nightly
+    * compaction touches hot cells, not the corpus). Readers that
+    * resolved any version always find their full file list on disk:
+    * pre- or post-compaction results, never a half-swapped cell.
+    * Replaced files stay as the new version's `expired` set until an
+    * explicit StoreManifest.gcExpired after in-flight readers drain. A
+    * crash between the staged write and the manifest flip leaks
+    * untracked `compact-*` files (invisible to snapshots) —
     * StoreIntake.sweepIvfUntracked deletes exactly those (ledger-
     * protected epoch files and every manifested file survive).
+    * Single-maintenance-writer, as ever.
     */
   def compactIvfCellsSnapshot(spark: SparkSession, path: String,
       cells: Seq[Int]): Long =
@@ -699,9 +634,8 @@ object Similarity {
   def recompactIvfStoreClustered(spark: SparkSession, path: String,
       newCodebook: DataFrame): Long = {
     val root = s"$path/vectors"
-    val cur = StoreManifest.files(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"$root is not manifested — publish a manifest first"))
+    val cur = StoreManifest.files(spark, root,
+      Some(ivfVersion(spark, path))).get
     val cellDirs = cur.map(_.takeWhile(_ != '/')).toSet
     // Fail fast BEFORE staging the versioned codebook (ADVICE r14): an
     // empty manifest makes compactPartitionsSnapshot return without
@@ -735,61 +669,35 @@ object Similarity {
     v
   }
 
-  /** [[ivfTopKFromStore]] against the manifest SNAPSHOT — the
-    * race-free probe: the VERSION is resolved once, pinning both the
-    * file set and (since [[recompactIvfStoreClustered]]) the matching
-    * codebook generation (`codebook-v&lt;N&gt;` when present, the build-time
-    * `codebook` otherwise), so a concurrent snapshot compaction, epoch
-    * publish, or codebook retrain cannot change what this query reads
-    * or tear layout from centroids. Partition pruning survives the
-    * explicit file list (basePath keeps `cid=` directory resolution).
+  /** ANN search OFF the stored layout, against the manifest snapshot.
+    * The VERSION is resolved once, pinning both the file set and
+    * (since [[recompactIvfStoreClustered]]) the matching codebook
+    * generation, so a concurrent snapshot compaction, epoch publish,
+    * or codebook retrain cannot change what this query reads or tear
+    * layout from centroids. Probe cells are chosen against that
+    * codebook (collected driver-side — nCentroids rows, KBs), pushed
+    * into the vector scan as `cid IN (...)` — a PARTITION-PRUNED read
+    * touching only probed cell directories (basePath keeps `cid=`
+    * resolution over the explicit file list) — and the per-(query,
+    * cell) restriction applies via a broadcast join. The corpus side
+    * has ZERO exchanges: scan → broadcast join → WindowGroupLimit
+    * top-k; the only shuffle in the plan is the final q_id-sized
+    * window exchange. Bit-identical to ivfTopKWith over the same
+    * codebook (same tie-breaks); AtRestLayoutSpec pins both plan and
+    * parity.
     */
   def ivfTopKFromSnapshot(spark: SparkSession, path: String,
       queries: DataFrame, nProbe: Int, k: Int): DataFrame = {
-    val root = s"$path/vectors"
-    val version = StoreManifest.currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"$root carries no manifest — publish one first"))
-    val cent = loadCodebook(spark,
-      codebookPathAsOf(spark, path, Some(version)))
+    val version = ivfVersion(spark, path)
+    val cent = loadCodebook(spark, codebookPathAsOf(spark, path, version))
     // r17: in-row probe selection (see [[probeRows]]) — no window
     // exchange in the probe job.
     val probes = probeRows(queries, collectCentroids(cent), nProbe,
       cidInt = true)
     val cells = probes.select("cid").distinct()
       .collect().map(_.getInt(0)).toSeq
-    val store = StoreManifest.snapshotReadAsOf(spark, root, version)
-      .filter(col("cid").isin(cells: _*))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("n_id"))
-    store.join(broadcast(probes), "cid")
-      .select(col("q_id"), col("n_id"), cosCol.as("cos"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select("q_id", "n_id", "rn", "cos")
-  }
-
-  /** ANN search OFF the stored layout: probe cells are chosen against
-    * the stored codebook (collected driver-side — nCentroids rows,
-    * KBs), pushed into the vector scan as `cid IN (...)` — a
-    * PARTITION-PRUNED read touching only probed cell directories —
-    * and the per-(query, cell) restriction applies via a broadcast
-    * join. The corpus side has ZERO exchanges: scan → broadcast join →
-    * WindowGroupLimit top-k; the only shuffle in the plan is the final
-    * q_id-sized window exchange. Bit-identical to ivfTopKWith over the
-    * same codebook (same tie-breaks), AtRestLayoutSpec pins both plan
-    * and parity.
-    */
-  def ivfTopKFromStore(spark: SparkSession, path: String,
-      queries: DataFrame, nProbe: Int, k: Int): DataFrame = {
-    val cent = loadCodebook(spark, s"$path/codebook")
-    // r17: in-row probe selection (see [[probeRows]]).
-    val probes = probeRows(queries, collectCentroids(cent), nProbe,
-      cidInt = true)
-    val cells = probes.select("cid").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val store = spark.read.parquet(s"$path/vectors")
-      .filter(col("cid").isin(cells: _*))
+    val store = StoreManifest.snapshotReadAsOf(spark, s"$path/vectors",
+      version).filter(col("cid").isin(cells: _*))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("n_id"))
     store.join(broadcast(probes), "cid")
@@ -1561,8 +1469,9 @@ object Similarity {
   /** The full at-rest ANN pipeline: compressed-code candidate scan
     * (PQ store, partition-pruned) → bounded exact re-rank fetching
     * candidate vectors from the RAW vector store ([[writeIvfStore]]
-    * layout), itself pruned to the probed cells (candidates can only
-    * come from there). The production read path end to end: codes are
+    * layout, read through its manifest snapshot), itself pruned to the
+    * probed cells (candidates can only come from there). The
+    * production read path end to end: codes are
     * scanned wide and cheap, raw vectors touched only for
     * nQueries × nCand candidates.
     */
@@ -1573,7 +1482,7 @@ object Similarity {
     val cells = probedCells(queries, cent, nProbe)
     val cand = pqStoreSearch(spark, pqPath, queries, cent, cells,
       nProbe, math.max(nCand, k)).select(col("q_id"), col("n_id"))
-    val store = spark.read.parquet(s"$vecPath/vectors")
+    val store = StoreManifest.snapshotRead(spark, s"$vecPath/vectors")
       .filter(col("cid").isin(cells: _*))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("n_id"))
@@ -1713,8 +1622,8 @@ object Similarity {
     * stand-in, and a skewed corpus MUST pass a trained (lloydRefine)
     * codebook via [[semDedupWith]] — a mode-collapsed cell under a
     * bad codebook re-creates the global quadratic. ivfCellStats /
-    * ivfStoreDrift report exactly this imbalance. Assignment runs
-    * once (memoized like the residual table — three consumers) +
+    * ivfStoreDriftSnapshot report exactly this imbalance. Assignment
+    * runs once (memoized like the residual table — three consumers) +
     * drop-marking: two corpus shuffles total. Output:
     * (vec_id, cid, kept) for every vector.
     */

@@ -335,7 +335,6 @@ object SimilarityQueries {
             .createTempDirectory("graft-ivfrecompact").toString + "/ivf"
           val cent0 = Similarity.firstNCodebook(e, NQ, 8)
           Similarity.writeIvfStore(e, cent0, NQ, p)
-          Similarity.publishIvfManifest(s, p): Unit
           val trained = Similarity.lloydRefine(e, cent0, NQ, iters = 2)
           Similarity.recompactIvfStoreClustered(s, p, trained): Unit
           p

@@ -224,9 +224,11 @@ object StoreManifest {
     * the signature-store pattern) returns an EMPTY frame, with the
     * schema inferred from the nearest version that does list files
     * (ADVICE r14: the two cases used to share one error).
+    * `mergeSchema` unions every file's columns (additively evolved
+    * epochs) at a footer read per file; off, one file's schema binds.
     */
   def snapshotReadAsOf(spark: SparkSession, root: String,
-      version: Long): DataFrame = {
+      version: Long, mergeSchema: Boolean = false): DataFrame = {
     val cur = currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(
         s"$root carries no manifest — publish one first"))
@@ -234,8 +236,9 @@ object StoreManifest {
       s"manifest at $root has no version $version (published line " +
         s"1..$cur)")
     val fl = files(spark, root, Some(version)).getOrElse(Seq.empty)
+    val reader = spark.read.option("basePath", root)
     if (fl.nonEmpty)
-      spark.read.option("basePath", root)
+      (if (mergeSchema) reader.option("mergeSchema", "true") else reader)
         .parquet(fl.map(f => s"$root/$f"): _*)
     else emptyWithStoreSchema(spark, root, cur,
       s"version $version lists no files and no version ever has")

@@ -465,19 +465,31 @@ object StoreIntake {
   }
 
   /** foreachBatch body: append one micro-batch of (vec_id, embedding)
-    * vectors to an IVF store (Similarity.writeIvfStore layout) under
-    * the exactly-once epoch ledger. Assignment runs against the STORED
-    * codebook (broadcast, KB-sized — the appendToIvfStore contract:
-    * cells never move on intake), files land tagged under their cell
-    * directories, and resident files are never touched. With
-    * `compactOver > 0`, any cell whose file count crossed it is
-    * compacted after the append (the maintenance trigger; intake and
-    * compaction share the single-writer window by construction here —
-    * both run inside the serialized foreachBatch).
+    * vectors to an IVF store (Similarity.writeIvfStore layout, born
+    * manifested) under the exactly-once epoch ledger. Assignment runs
+    * against the codebook in force (broadcast, KB-sized — cells never
+    * move on intake), files land tagged under their cell directories,
+    * resident files are never touched, and the epoch publishes
+    * COMPOSITIONALLY: current live list + this epoch's placed files.
+    * Snapshot readers advance to old ∪ new in one pointer flip (never
+    * a partial epoch) — and never a resurrected expired file, which a
+    * directory relist would drag back in between compaction and GC.
+    * With `compactOver > 0`, any cell whose LIVE file count crossed it
+    * is snapshot-compacted after the append, and expired files from
+    * versions at least two flips old are collected (the previous
+    * version's in-flight readers stay whole) — intake and maintenance
+    * share the single-writer window by construction here, both inside
+    * the serialized foreachBatch. A directory without a manifest is
+    * rejected before anything is staged or recorded.
     */
   def ivfIntakeBatch(storePath: String, scope: String,
       compactOver: Int = 0)(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
+    val vectorsRoot = s"$storePath/vectors"
+    require(graft.operators.StoreManifest
+      .currentVersion(spark, vectorsRoot).isDefined,
+      s"$vectorsRoot carries no manifest — build the store with " +
+        "Similarity.writeIvfStore before streaming into it")
     if (batch.isEmpty) {
       if (!epochApplied(spark, storePath, scope, batchId))
         appendEpoch(spark, storePath, scope, batchId)(_ => ()): Unit
@@ -488,16 +500,7 @@ object StoreIntake {
       graft.operators.Similarity.stageIvfEpoch(
         graft.operators.Similarity.prepared(batch), storePath, stageDir)
     }
-    val applied = placed.isDefined
-    val vectorsRoot = s"$storePath/vectors"
-    val manifested = graft.operators.StoreManifest
-      .currentVersion(spark, vectorsRoot).isDefined
-    if (manifested) placed match {
-      // Publish the epoch COMPOSITIONALLY: current live list + this
-      // epoch's placed files. Snapshot readers advance to old ∪ new in
-      // one pointer flip (never a partial epoch, unlike listing
-      // readers) — and never a resurrected expired file, which a
-      // directory relist would drag back in between compaction and GC.
+    placed match {
       case Some(p) =>
         publishFresh(spark, vectorsRoot,
           p.filter(_.startsWith("vectors/"))
@@ -513,36 +516,14 @@ object StoreIntake {
             .filter(_.startsWith("vectors/"))
             .map(_.stripPrefix("vectors/")))
     }
-    if (applied && compactOver > 0) {
-      if (manifested) {
-        // Manifest mode: LIVE files per cell come from the manifest
-        // (the directory listing still holds expired-but-not-GCed
-        // files — counting those would re-trigger compaction forever);
-        // compaction is the snapshot (reader-safe) variant, and
-        // expired files from versions at least two flips old are
-        // collected — the previous version's in-flight readers stay
-        // whole.
-        val live = graft.operators.StoreManifest
-          .files(spark, vectorsRoot).getOrElse(Seq.empty)
-        val hot = live.groupBy(_.takeWhile(_ != '/'))
-          .collect { case (cell, fs)
-            if cell.startsWith("cid=") && fs.size > compactOver =>
-            cell.stripPrefix("cid=").toInt }
-          .toSeq
-        if (hot.nonEmpty) {
-          graft.operators.Similarity.compactIvfCellsSnapshot(spark,
-            storePath, hot)
-          graft.operators.StoreManifest.gcExpired(spark, vectorsRoot,
-            keepVersions = 2): Unit
-        }
-      } else {
-        val hot = graft.operators.Similarity
-          .ivfStoreCellStats(spark, storePath)
-          .collect { case (cid, nFiles, _)
-            if nFiles > compactOver => cid }
-        if (hot.nonEmpty)
-          graft.operators.Similarity.compactIvfCells(spark, storePath,
-            hot)
+    if (placed.isDefined && compactOver > 0) {
+      val hot = graft.operators.Similarity.ivfCellFiles(spark, storePath)
+        .collect { case (cid, n) if n > compactOver => cid }
+      if (hot.nonEmpty) {
+        graft.operators.Similarity.compactIvfCellsSnapshot(spark,
+          storePath, hot)
+        graft.operators.StoreManifest.gcExpired(spark, vectorsRoot,
+          keepVersions = 2): Unit
       }
     }
   }
@@ -574,11 +555,13 @@ object StoreIntake {
         // fixture epoch of ~350 rows, each paying a task commit, an
         // individual ledger rename, an intent line, and a manifest
         // list entry. Hash-clustering on `source` bounds an epoch to
-        // one file per source at any input width; at 100 TB per-source
-        // file size is then governed by maxRecordsPerFile / a
-        // REBALANCE-style split, while the small-files growth the
-        // per-source compaction exists to fold stays bounded at the
-        // source, not repaired after.
+        // one file per source at any input width, while the
+        // small-files growth the per-source compaction exists to fold
+        // stays bounded at the source, not repaired after. Nothing
+        // bounds per-source file SIZE yet: maxRecordsPerFile is not
+        // set, so one hot source is one write task and one file.
+        // Repartitioning on (source, hash slice) is the lever that
+        // splits it.
         batch.repartition(col("source"))
           .write.partitionBy("source").mode("overwrite")
           .parquet(stageDir)

@@ -733,6 +733,11 @@ object StreamingPipelineQuery {
     // re-election still happen; the min-merge store is eviction-
     // timing-agnostic by construction (canonicalKeepersBounded's
     // safety argument), and the oracle hash gates the converged rows.
+    // The FINAL execution (3b) has no next data batch to open, so the
+    // timers it registers never fire. That is harmless here: the
+    // query's output is the converged min-merge store, and no
+    // re-delivery follows that an unfired eviction could let
+    // re-elect — the only effect a late timer can have.
     withReplaySession(spark0, shuffleN(4), NoDataBatchesOff) { spark =>
     // This replay right-sized to 4 a round before the others: FOUR
     // AvailableNow executions pay RocksDB load/commit per (partition ×

@@ -67,7 +67,7 @@ class AtRestLayoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       Similarity.writeIvfStore(e, cb, NQ, path)
 
       val nProbe = 2
-      val viaStore = Similarity.ivfTopKFromStore(spark, path,
+      val viaStore = Similarity.ivfTopKFromSnapshot(spark, path,
         Similarity.querySide(e, NQ), nProbe, k = 5)
       val rows = viaStore.orderBy("q_id", "rn").collect().toSeq
       // Plan: the vector scan carries the probed cells as partition
@@ -100,7 +100,7 @@ class AtRestLayoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(rows == direct)
       // The pruning is real: nProbe=2 of 8 cells per query; the union
       // of probed cells must be a strict subset of all cells.
-      val allCells = spark.read.parquet(s"$path/vectors")
+      val allCells = StoreManifest.snapshotRead(spark, s"$path/vectors")
         .select("cid").distinct().count()
       val probedFiles = scan.head.metrics.get("numFiles")
         .map(_.value).getOrElse(0L)
@@ -125,26 +125,25 @@ class AtRestLayoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         col("vec_id") % 2 === 0)
       val intake = e.filter(col("vec_id") >= NQ &&
         col("vec_id") % 2 === 1)
-      Similarity.writeIvfStore(resident, stale, NQ, path)
-      Similarity.publishIvfManifest(spark, path) // v1, stale book
+      Similarity.writeIvfStore(resident, stale, NQ, path) // v1, stale book
       val trained = Similarity.lloydRefine(resident, stale, NQ,
         iters = 2)
       Similarity.recompactIvfStoreClustered(spark, path, trained) // v2
       // The intake must assign against codebook-v2 (exact-match
       // resolution — the reverted bug — would use the stale build-time
       // book and scatter new vectors into cells the retrained layout
-      // no longer means). COMPOSITIONAL publish: a listing re-publish
+      // no longer means). COMPOSITIONAL publish: a relisting publish
       // here would resurrect v1's expired stale-assigned files into
-      // v3 — the trap appendToIvfStoreManifested exists to close.
+      // v3 — the trap appendToIvfStoreManifested closes.
       val v3 = Similarity.appendToIvfStoreManifested(intake, path)
       assert(v3 == 3L) // v3, NO codebook-v3 → resolves codebook-v2
       val union = resident.unionByName(intake)
         .select(col("vec_id").as("n_id"), col("v").as("cv"),
           col("nrm").as("cn"))
       // Every stored row sits in the cell the TRAINED book assigns —
-      // including the post-recompaction epoch's. Read the SNAPSHOT:
-      // a listing read would also see the compaction's expired
-      // stale-assigned files (the adoption contract).
+      // including the post-recompaction epoch's. The snapshot holds
+      // only live files; the directory still holds the compaction's
+      // expired stale-assigned ones until GC.
       val storedCells = StoreManifest
         .snapshotRead(spark, s"$path/vectors")
         .select("n_id", "cid").collect()
@@ -157,6 +156,13 @@ class AtRestLayoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
       assert(storedCells == wantCells,
         "a stored vector's cell diverged from the trained assignment")
+      // The drift report measures the v3 layout against the book it
+      // was built under: equal to the in-memory report over the union
+      // and the trained codebook.
+      assert(Similarity.ivfStoreDriftSnapshot(spark, path)
+        .collect().toSeq ==
+        Similarity.ivfCellStatsWith(union, trained).collect().toSeq,
+        "snapshot drift must use the codebook generation in force")
       // The v3 snapshot probe resolves the v2 book (greatest <= 3)
       // and is bit-identical to the in-memory trained IVF over the
       // union.
@@ -171,6 +177,48 @@ class AtRestLayoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(viaStore == direct,
         "post-append snapshot probe diverged from the trained " +
           "in-memory IVF")
+    } finally e.unpersist(): Unit
+  }
+
+  test("a rebuild at a recompacted path drops the old codebook " +
+    "generations: intake and probes after the rebuild use the " +
+    "rebuild's codebook") {
+    val spark = TestSpark.spark
+    val path = Files.createTempDirectory("graft-ivfrebuild").toString +
+      "/v"
+    val e = Similarity.prepared(Tables.t(spark, dir, "embeddings"))
+      .persist()
+    try {
+      val NQ = 5
+      val first = Similarity.firstNCodebook(e, NQ, 8)
+      val resident = e.filter(col("vec_id") < NQ ||
+        col("vec_id") % 2 === 0)
+      val intake = e.filter(col("vec_id") >= NQ &&
+        col("vec_id") % 2 === 1)
+      // Store one: v1 built on the first-N book, v2 re-clustered onto
+      // a retrained book published as codebook-v2.
+      Similarity.writeIvfStore(resident, first, NQ, path)
+      val trained = Similarity.lloydRefine(resident, first, NQ,
+        iters = 2)
+      assert(Similarity.recompactIvfStoreClustered(spark, path,
+        trained) == 2L)
+      // Store two at the same path: a fresh line from v1 on the
+      // first-N book. The append lands on v2 — the version the old
+      // retrain's codebook-v2 was published under.
+      Similarity.writeIvfStore(resident, first, NQ, path)
+      assert(StoreManifest.currentVersion(spark, s"$path/vectors")
+        .contains(1L))
+      assert(!new java.io.File(s"$path/codebook-v2").exists(),
+        "the rebuild must delete the previous store's codebook-v2")
+      assert(Similarity.appendToIvfStoreManifested(intake, path) == 2L)
+      val viaStore = Similarity.ivfTopKFromSnapshot(spark, path,
+        Similarity.querySide(e, NQ), nProbe = 2, k = 5)
+        .orderBy("q_id", "rn").collect().toSeq
+      val direct = Similarity.ivfTopKWith(e, first, NQ, nProbe = 2,
+        k = 5).orderBy("q_id", "rn").collect().toSeq
+      assert(viaStore == direct,
+        "post-rebuild probe diverged from the in-memory IVF over the " +
+          "rebuild's codebook")
     } finally e.unpersist(): Unit
   }
 
@@ -234,9 +282,12 @@ class AtRestLayoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .select(col("id").as("cid"), array(lit(1.0f)).as("centv"),
         lit(1.0f).as("centn"))
       .write.parquet(s"$path/codebook")
+    // An empty v1 stands in for the vector table: the probe resolves
+    // the manifest, then fails on the codebook before any vector scan.
+    StoreManifest.publish(spark, s"$path/vectors", Seq.empty): Unit
     val q = Seq((0L, Array(1.0f), 1.0f)).toDF("q_id", "qv", "qn")
     val ex = intercept[IllegalArgumentException] {
-      Similarity.ivfTopKFromStore(spark, path, q, nProbe = 1, k = 1)
+      Similarity.ivfTopKFromSnapshot(spark, path, q, nProbe = 1, k = 1)
     }
     // "65537+" proves the fetch was LIMIT-bounded: the guard saw the
     // capped batch, not a full corpus pulled into the driver to count.

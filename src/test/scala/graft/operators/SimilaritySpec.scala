@@ -147,13 +147,14 @@ class SimilaritySpec extends AnyFunSuite {
     assert(rows.forall(r => r.getLong(3) >= -1 && r.getLong(3) <= 2000000L))
     // Store-side drift report equals the in-memory computation exactly:
     // the store's cid column was written by the same assignment, so
-    // ivfStoreDrift must reproduce every (cid, n, share, err) row.
+    // ivfStoreDriftSnapshot must reproduce every (cid, n, share, err)
+    // row.
     val store = java.nio.file.Files
       .createTempDirectory("graft-drift-store").toString
     try {
       Similarity.writeIvfStore(e, Similarity.firstNCodebook(e, 5, 8),
         5, store)
-      val drift = Similarity.ivfStoreDrift(spark, store).collect()
+      val drift = Similarity.ivfStoreDriftSnapshot(spark, store).collect()
       assert(drift.map(_.toSeq).toSeq == rows.map(_.toSeq).toSeq,
         "store drift report diverged from ivfCellStats")
     } finally {

@@ -123,9 +123,10 @@ class StoreMaintenanceSpec extends AnyFunSuite {
       val before = dataFiles(spark, s"$path/vectors")
 
       // Epoch append: the odd half, assigned against the STORED
-      // codebook.
-      Similarity.appendToIvfStore(
+      // codebook and published as v2 over the build's v1.
+      assert(Similarity.appendToIvfStoreManifested(
         e.filter(col("vec_id") >= NQ && col("vec_id") % 2 =!= 0), path)
+        == 2L)
       val after = dataFiles(spark, s"$path/vectors")
       assert(before.subsetOf(after), "append rewrote resident files")
       assert(after.size > before.size)
@@ -133,23 +134,23 @@ class StoreMaintenanceSpec extends AnyFunSuite {
       // Probe the appended store == in-memory IVF over the full corpus
       // with the same codebook (bit-identical tie-breaks).
       val nProbe = 2
-      val viaStore = Similarity.ivfTopKFromStore(spark, path,
+      val viaStore = Similarity.ivfTopKFromSnapshot(spark, path,
         Similarity.querySide(e, NQ), nProbe, k = 5)
         .orderBy("q_id", "rn").collect().toSeq
       val direct = Similarity.ivfTopKWith(e, cb, NQ, nProbe, k = 5)
         .orderBy("q_id", "rn").collect().toSeq
       assert(viaStore == direct)
 
-      // Compaction criterion: appended cells carry >1 file.
-      val stats = Similarity.ivfStoreCellStats(spark, path)
+      // Compaction criterion: appended cells carry >1 live file.
+      val stats = Similarity.ivfCellFiles(spark, path)
       val hot = stats.filter(_._2 > 1).map(_._1)
       assert(hot.nonEmpty, s"expected multi-file cells: $stats")
       val untouched = stats.filter(_._2 == 1).map(_._1).toSet
       val untouchedBefore = after.filter { case (p, _) =>
         untouched.exists(c => p.contains(s"cid=$c/")) }
 
-      Similarity.compactIvfCells(spark, path, hot)
-      val cstats = Similarity.ivfStoreCellStats(spark, path)
+      assert(Similarity.compactIvfCellsSnapshot(spark, path, hot) == 3L)
+      val cstats = Similarity.ivfCellFiles(spark, path)
       assert(cstats.filter(c => hot.contains(c._1)).forall(_._2 == 1),
         s"compacted cells must hold one file: $cstats")
       // Cells not named in the compaction keep their exact files.
@@ -159,7 +160,7 @@ class StoreMaintenanceSpec extends AnyFunSuite {
       assert(untouchedAfter == untouchedBefore,
         "compaction touched cells outside the named set")
       // Row-level content is preserved exactly.
-      val viaCompacted = Similarity.ivfTopKFromStore(spark, path,
+      val viaCompacted = Similarity.ivfTopKFromSnapshot(spark, path,
         Similarity.querySide(e, NQ), nProbe, k = 5)
         .orderBy("q_id", "rn").collect().toSeq
       assert(viaCompacted == direct)
@@ -180,11 +181,13 @@ class StoreMaintenanceSpec extends AnyFunSuite {
     // Evolved epoch: same core columns plus a source tag.
     val evolved = e.filter(col("vec_id") >= NQ &&
       col("vec_id") % 2 =!= 0).withColumn("src_tag", lit("epoch2"))
-    Similarity.appendToIvfStore(evolved, path)
+    Similarity.appendToIvfStoreManifested(evolved, path): Unit
 
     // Evolution-aware read: resident rows surface the new column as
     // null, evolved rows carry it; nothing lost either way.
-    val all = Similarity.ivfStoreRead(spark, path)
+    val all = StoreManifest.snapshotReadAsOf(spark, s"$path/vectors",
+      StoreManifest.currentVersion(spark, s"$path/vectors").get,
+      mergeSchema = true)
     assert(all.columns.contains("src_tag"))
     val nulls = all.filter(col("src_tag").isNull)
       .select("n_id").collect().map(_.getLong(0)).toSet
@@ -197,7 +200,7 @@ class StoreMaintenanceSpec extends AnyFunSuite {
     // The plain probe is oblivious to evolution (core columns only)
     // and still equals the in-memory IVF over the union; the scan
     // stays partition-pruned.
-    val probe = Similarity.ivfTopKFromStore(spark, path,
+    val probe = Similarity.ivfTopKFromSnapshot(spark, path,
       Similarity.querySide(e, NQ), nProbe = 2, k = 5)
     val viaStore = probe.orderBy("q_id", "rn").collect().toSeq
     val direct = Similarity.ivfTopKWith(e, cb, NQ, nProbe = 2, k = 5)
@@ -214,18 +217,20 @@ class StoreMaintenanceSpec extends AnyFunSuite {
     // caught even earlier, by the assignment expressions' own analysis
     // (array_dot rejects array<float>) — loud either way.
     val before = dataFiles(spark, s"$path/vectors")
+    val vBefore = StoreManifest.currentVersion(spark, s"$path/vectors")
     val ex = intercept[IllegalArgumentException] {
-      Similarity.appendToIvfStore(
+      Similarity.appendToIvfStoreManifested(
         e.filter(col("vec_id") >= NQ)
           .withColumn("src_tag", lit(3L)), path)
     }
     assert(ex.getMessage.contains("incompatible schema evolution"))
     intercept[Exception] {
-      Similarity.appendToIvfStore(
+      Similarity.appendToIvfStoreManifested(
         e.filter(col("vec_id") >= NQ)
           .withColumn("v", col("v").cast("array<float>")), path)
     }
-    assert(dataFiles(spark, s"$path/vectors") == before,
+    assert(dataFiles(spark, s"$path/vectors") == before &&
+      StoreManifest.currentVersion(spark, s"$path/vectors") == vBefore,
       "rejected appends must leave the store untouched")
   }
 
@@ -270,17 +275,16 @@ class StoreMaintenanceSpec extends AnyFunSuite {
       Similarity.writeIvfStore(
         e.filter(col("vec_id") < NQ || col("vec_id") % 3 === 0), cb, NQ,
         path)
-      Similarity.appendToIvfStore(
+      Similarity.appendToIvfStoreManifested(
         e.filter(col("vec_id") >= NQ && col("vec_id") % 3 === 1), path)
-      Similarity.appendToIvfStore(
+      val v1 = Similarity.appendToIvfStoreManifested(
         e.filter(col("vec_id") >= NQ && col("vec_id") % 3 === 2), path)
-      val v1 = Similarity.publishIvfManifest(spark, path)
-      assert(v1 == 1L)
+      assert(v1 == 3L)
       val expected = Similarity.ivfTopKFromSnapshot(spark, path,
         Similarity.querySide(e, NQ), nProbe = 3, k = 5)
         .orderBy("q_id", "rn").collect().toSeq
       assert(expected.nonEmpty)
-      val preDrift = Similarity.ivfStoreDrift(spark, path)
+      val preDrift = Similarity.ivfStoreDriftSnapshot(spark, path)
         .collect().toSeq
 
       // Reader thread hammers the snapshot probe while the main
@@ -302,7 +306,7 @@ class StoreMaintenanceSpec extends AnyFunSuite {
         } catch { case t: Throwable => failures.set(t) }
       })
       reader.start()
-      val hot = Similarity.ivfStoreCellStats(spark, path)
+      val hot = Similarity.ivfCellFiles(spark, path)
         .filter(_._2 > 1).map(_._1)
       assert(hot.nonEmpty)
       val v2 = Similarity.compactIvfCellsSnapshot(spark, path, hot)
@@ -328,15 +332,10 @@ class StoreMaintenanceSpec extends AnyFunSuite {
       assert(onDisk.size > live.size,
         "expired files must survive until GC")
 
-      // Drift monitoring between compaction and GC: the LISTING-based
-      // report double-counts compacted cells (live + expired copies of
-      // the same rows — the documented hazard, proven real here),
-      // while the snapshot form equals the pre-compaction report
+      // Drift monitoring between compaction and GC: the directory
+      // holds live AND expired copies of the compacted cells' rows,
+      // and the snapshot report still equals the pre-compaction one
       // exactly (compaction moves bytes, never content).
-      val listDrift = Similarity.ivfStoreDrift(spark, path)
-        .collect().toSeq
-      assert(listDrift != preDrift,
-        "expected the listing drift to double-count before GC")
       assert(Similarity.ivfStoreDriftSnapshot(spark, path)
         .collect().toSeq == preDrift,
         "snapshot drift must see exactly the live content")

@@ -33,7 +33,8 @@ class StoreIntakeSpec extends AnyFunSuite {
       while (it.hasNext) {
         val s = it.next()
         if (!s.getPath.getName.startsWith("_") &&
-          !s.getPath.toString.contains("/."))
+          !s.getPath.toString.contains("/.") &&
+          !s.getPath.toString.contains("/_manifest/"))
           b += ((s.getPath.toString, s.getLen))
       }
       b.result()
@@ -57,14 +58,18 @@ class StoreIntakeSpec extends AnyFunSuite {
     val b2 = raw.filter(col("vec_id") >= NQ && col("vec_id") % 6 === 3)
 
     // Batch 0 applies; its replay is skipped with the store untouched.
-    val before = listing(spark, s"$store/vectors")
+    val vroot = s"$store/vectors"
+    val before = listing(spark, vroot)
     StoreIntake.ivfIntakeBatch(store, scope)(b1, 0L)
-    val after1 = listing(spark, s"$store/vectors")
+    val after1 = listing(spark, vroot)
     assert(before.subsetOf(after1) && after1.size > before.size,
       "epoch 0 must add files without rewriting residents")
     assert(StoreIntake.epochApplied(spark, store, scope, 0L))
+    val v1 = graft.operators.StoreManifest.currentVersion(spark, vroot)
+    assert(v1.contains(2L), s"epoch 0 must publish v2 over v1, got $v1")
     StoreIntake.ivfIntakeBatch(store, scope)(b1, 0L)
-    assert(listing(spark, s"$store/vectors") == after1,
+    assert(listing(spark, vroot) == after1 &&
+      graft.operators.StoreManifest.currentVersion(spark, vroot) == v1,
       "replaying an applied epoch must be a no-op")
 
     // Batch 1 killed after ONE rename: not recorded, partial files
@@ -85,7 +90,7 @@ class StoreIntakeSpec extends AnyFunSuite {
     // row appears twice even though a file already landed.
     StoreIntake.ivfIntakeBatch(store, scope)(b2, 1L)
     assert(StoreIntake.epochApplied(spark, store, scope, 1L))
-    val stored = spark.read.parquet(s"$store/vectors")
+    val stored = graft.operators.StoreManifest.snapshotRead(spark, vroot)
     val expectIds = e.filter(col("vec_id") >= NQ &&
       (col("vec_id") % 3 =!= 0 || col("vec_id") % 6 === 0 ||
         col("vec_id") % 6 === 3))
@@ -97,7 +102,7 @@ class StoreIntakeSpec extends AnyFunSuite {
 
     // Probe parity with the in-memory IVF over the union corpus, and
     // the ledger lists exactly the applied epochs.
-    val viaStore = Similarity.ivfTopKFromStore(spark, store,
+    val viaStore = Similarity.ivfTopKFromSnapshot(spark, store,
       Similarity.querySide(e, NQ), nProbe = 3, k = 5)
       .orderBy("q_id", "rn").collect()
     val union = e.filter(col("vec_id") < NQ ||
@@ -125,6 +130,39 @@ class StoreIntakeSpec extends AnyFunSuite {
     StoreIntake.ivfIntakeBatch(store, "s")(empty, 7L)
     assert(StoreIntake.epochApplied(spark, store, "s", 7L))
     assert(listing(spark, s"$store/vectors") == before)
+    assert(graft.operators.StoreManifest.currentVersion(spark,
+      s"$store/vectors").contains(1L))
+  }
+
+  test("IVF intake into a directory without a manifest fails before " +
+    "anything is staged or recorded") {
+    val spark = TestSpark.spark
+    val store = Files.createTempDirectory("graft-ivf-nomanif").toString +
+      "/ivf"
+    val raw = Tables.t(spark, dir, "embeddings")
+      .select("vec_id", "embedding")
+    val e = Similarity.prepared(raw)
+    Similarity.writeIvfStore(e.filter(col("vec_id") % 2 === 1),
+      Similarity.firstNCodebook(e, NQ, 4), NQ, store)
+    // The unmanifested shape: a cell-partitioned vector table with a
+    // codebook but no manifest (a copy of a store, or one whose
+    // manifest was lost).
+    val fsp = new org.apache.hadoop.fs.Path(s"$store/vectors/_manifest")
+    fsp.getFileSystem(spark.sessionState.newHadoopConf())
+      .delete(fsp, true): Unit
+    val before = listing(spark, store)
+    val b = raw.filter(col("vec_id") >= NQ && col("vec_id") % 2 === 0)
+    Seq(b, b.filter(lit(false))).foreach { batch =>
+      val ex = intercept[IllegalArgumentException] {
+        StoreIntake.ivfIntakeBatch(store, "nm", compactOver = 2)(batch, 0L)
+      }
+      assert(ex.getMessage.contains("carries no manifest"), ex.getMessage)
+    }
+    assert(listing(spark, store) == before,
+      "a rejected intake must leave the directory untouched")
+    assert(!new java.io.File(s"$store/_epochs").exists(),
+      "a rejected intake must not record an epoch")
+    assert(!StoreIntake.epochApplied(spark, store, "nm", 0L))
   }
 
   test("manifested IVF intake: every epoch publishes a snapshot " +
@@ -139,7 +177,8 @@ class StoreIntakeSpec extends AnyFunSuite {
     val cb = Similarity.firstNCodebook(e, NQ, 8)
     Similarity.writeIvfStore(e.filter(col("vec_id") % 4 === 1), cb, NQ,
       store)
-    assert(Similarity.publishIvfManifest(spark, store) == 1L)
+    assert(graft.operators.StoreManifest.currentVersion(spark,
+      s"$store/vectors").contains(1L))
     // Four intake epochs (fresh ids — offset per epoch) with an
     // aggressive trigger: every cell crosses 2 live files repeatedly,
     // so snapshot compactions and GCs interleave with publishes.
@@ -153,8 +192,7 @@ class StoreIntakeSpec extends AnyFunSuite {
     val v = graft.operators.StoreManifest.currentVersion(spark, vroot)
     assert(v.exists(_ >= 5L), s"expected ≥5 manifest versions, got $v")
     // Live files per cell bounded by the trigger.
-    val live = graft.operators.StoreManifest.files(spark, vroot).get
-    val perCell = live.groupBy(_.takeWhile(_ != '/')).values.map(_.size)
+    val perCell = Similarity.ivfCellFiles(spark, store).map(_._2)
     assert(perCell.max <= 3,
       s"live files per cell exceeded the trigger: $perCell")
     // The snapshot answers exactly like the in-memory IVF over the
@@ -197,8 +235,9 @@ class StoreIntakeSpec extends AnyFunSuite {
     val cb = Similarity.firstNCodebook(e, NQ, 8)
     Similarity.writeIvfStore(e.filter(col("vec_id") % 2 === 1), cb, NQ,
       store)
-    assert(Similarity.publishIvfManifest(spark, store) == 1L)
     val vroot = s"$store/vectors"
+    assert(graft.operators.StoreManifest.currentVersion(spark, vroot)
+      .contains(1L))
     val baseCount = graft.operators.StoreManifest
       .snapshotRead(spark, vroot).count()
     // Simulate the crash window: apply the epoch through appendEpoch
@@ -259,8 +298,9 @@ class StoreIntakeSpec extends AnyFunSuite {
     val cb = Similarity.firstNCodebook(e, NQ, 8)
     Similarity.writeIvfStore(e.filter(col("vec_id") % 2 === 1), cb, NQ,
       store)
-    assert(Similarity.publishIvfManifest(spark, store) == 1L)
     val vroot = s"$store/vectors"
+    assert(graft.operators.StoreManifest.currentVersion(spark, vroot)
+      .contains(1L))
     val fs = new org.apache.hadoop.fs.Path(vroot)
       .getFileSystem(spark.sessionState.newHadoopConf())
     val snapBefore = graft.operators.StoreManifest
@@ -330,7 +370,8 @@ class StoreIntakeSpec extends AnyFunSuite {
     }
     val epochsBefore = StoreIntake.appliedEpochs(spark, store)
     val ledgerBefore = StoreIntake.ledgerFiles(spark, store).toSet
-    val rowsBefore = spark.read.parquet(s"$store/vectors").count()
+    val rowsBefore = graft.operators.StoreManifest
+      .snapshotRead(spark, s"$store/vectors").count()
     // Fold all but the newest 2 markers.
     assert(StoreIntake.compactEpochLedger(spark, store, keepLast = 2)
       == 3)
@@ -348,7 +389,8 @@ class StoreIntakeSpec extends AnyFunSuite {
     }
     // Replaying a FOLDED epoch is still a no-op (marker long gone).
     StoreIntake.ivfIntakeBatch(store, "lc")(batches(0), 0L)
-    assert(spark.read.parquet(s"$store/vectors").count() == rowsBefore,
+    assert(graft.operators.StoreManifest
+      .snapshotRead(spark, s"$store/vectors").count() == rowsBefore,
       "a replay of a consolidated epoch must append nothing")
     // A second compaction with nothing eligible is a no-op.
     assert(StoreIntake.compactEpochLedger(spark, store, keepLast = 2)
